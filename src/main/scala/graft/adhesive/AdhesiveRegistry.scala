@@ -97,10 +97,25 @@ object AdhesiveRegistry {
 
   private[adhesive] def compileCacheSize: Int = compileCache.size
 
-  private def compiledCached(lang: String, source: String)(
-      doCompile: => (String, Map[String, Array[Byte]]))
+  /** Compile `source` ("java" or "scala") under a fresh generated package,
+    * through the compile cache. Returns (class name, bytecode); a compile
+    * error names the function it was compiled for.
+    */
+  private def compileSource(lang: String, name: String, source: String)
       : (String, Map[String, Array[Byte]]) =
-    compileCache.getOrCompute((lang, source))(doCompile)
+    compileCache.getOrCompute((lang, source)) {
+      try {
+        val (rewritten, fqn) = SourceRewriter.rewrite(source)
+        val bytecode =
+          if (lang == "java") InMemoryJavaCompiler.compile(fqn, rewritten)
+          else InMemoryScalaCompiler.compile(fqn, rewritten)
+        (fqn, bytecode)
+      } catch {
+        case e: AdhesiveCompileException =>
+          throw new AdhesiveCompileException(s"Can't compile function '$name'" +
+            e.getMessage.stripPrefix("Can't compile function"))
+      }
+    }
 
   /** Return-type validation, hoisted BEFORE compilation/instantiation: a
     * DDL guaranteed to fail must not spend a javac/scalac run, populate
@@ -123,10 +138,7 @@ object AdhesiveRegistry {
       nonNullable: Boolean = false,
       deterministic: Boolean = false): Unit = {
     requireSupportedReturnType(returnType)
-    val (fqn, bytecode) = compiledCached("java", source) {
-      val (rewritten, f) = SourceRewriter.rewrite(source)
-      (f, InMemoryJavaCompiler.compile(f, rewritten))
-    }
+    val (fqn, bytecode) = compileSource("java", name, source)
     AdhesiveInstances.instance(fqn, bytecode) // eager DDL-time validation
     register(spark, name, fqn, bytecode, argTypes, returnType, nonNullable,
       deterministic)
@@ -145,10 +157,7 @@ object AdhesiveRegistry {
       nonNullable: Boolean = false,
       deterministic: Boolean = false): Unit = {
     requireSupportedReturnType(returnType)
-    val (fqn, bytecode) = compiledCached("scala", source) {
-      val (rewritten, f) = SourceRewriter.rewrite(source)
-      (f, InMemoryScalaCompiler.compile(f, rewritten))
-    }
+    val (fqn, bytecode) = compileSource("scala", name, source)
     AdhesiveInstances.instance(fqn, bytecode)
     register(spark, name, fqn, bytecode, argTypes, returnType, nonNullable,
       deterministic)
@@ -255,10 +264,7 @@ object AdhesiveRegistry {
       deterministic: Boolean = false): Unit = {
     requireSupportedAggType("return", returnType)
     stateType.foreach(requireSupportedAggType("state", _))
-    val (fqn, bytecode) = compiledCached("java", source) {
-      val (rewritten, f) = SourceRewriter.rewrite(source)
-      (f, InMemoryJavaCompiler.compile(f, rewritten))
-    }
+    val (fqn, bytecode) = compileSource("java", name, source)
     AdhesiveInstances.aggregateInstance(fqn, bytecode) // eager validation
     registerAggregate(spark, name, fqn, bytecode, argTypes, returnType,
       stateType.getOrElse(returnType), deterministic = deterministic)
@@ -274,10 +280,7 @@ object AdhesiveRegistry {
       deterministic: Boolean = false): Unit = {
     requireSupportedAggType("return", returnType)
     stateType.foreach(requireSupportedAggType("state", _))
-    val (fqn, bytecode) = compiledCached("scala", source) {
-      val (rewritten, f) = SourceRewriter.rewrite(source)
-      (f, InMemoryScalaCompiler.compile(f, rewritten))
-    }
+    val (fqn, bytecode) = compileSource("scala", name, source)
     AdhesiveInstances.aggregateInstance(fqn, bytecode)
     registerAggregate(spark, name, fqn, bytecode, argTypes, returnType,
       stateType.getOrElse(returnType), deterministic = deterministic)
@@ -374,10 +377,7 @@ object AdhesiveRegistry {
       source: String,
       argTypes: Seq[DataType],
       outSchema: StructType): Unit = {
-    val (fqn, bytecode) = compiledCached("java", source) {
-      val (rewritten, f) = SourceRewriter.rewrite(source)
-      (f, InMemoryJavaCompiler.compile(f, rewritten))
-    }
+    val (fqn, bytecode) = compileSource("java", name, source)
     AdhesiveInstances.tableInstance(fqn, bytecode) // eager DDL validation
     registerTableFunction(spark, name, fqn, bytecode, argTypes, outSchema)
   }
@@ -388,10 +388,7 @@ object AdhesiveRegistry {
       source: String,
       argTypes: Seq[DataType],
       outSchema: StructType): Unit = {
-    val (fqn, bytecode) = compiledCached("scala", source) {
-      val (rewritten, f) = SourceRewriter.rewrite(source)
-      (f, InMemoryScalaCompiler.compile(f, rewritten))
-    }
+    val (fqn, bytecode) = compileSource("scala", name, source)
     AdhesiveInstances.tableInstance(fqn, bytecode)
     registerTableFunction(spark, name, fqn, bytecode, argTypes, outSchema)
   }

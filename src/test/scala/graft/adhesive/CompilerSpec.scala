@@ -26,11 +26,35 @@ class CompilerSpec extends AnyFunSuite {
   }
 
   test("compile + instantiate + compute round-trip") {
-    val (src, fqn) = SourceRewriter.rewrite(validSource)
-    val bytecode = InMemoryJavaCompiler.compile(fqn, src)
-    assert(bytecode.contains(fqn))
-    val inst = AdhesiveInstances.instance(fqn, bytecode)
-    assert(inst.compute(Row(21L)) == 42L)
+    def body(imports: String, cls: String, expr: String) =
+      s"""import graft.adhesive.Adhesive;
+         |import org.apache.spark.sql.Row;
+         |$imports
+         |public class $cls extends Adhesive {
+         |  public Object compute(Row row) { return $expr; }
+         |}""".stripMargin
+    val cases = Seq(
+      (validSource, Row(21L), 42L),
+      // one package split across jars: Row and SaveMode come from
+      // spark-sql-api, SparkSessionExtensions from spark-sql
+      (body("import org.apache.spark.sql.*;", "SplitPkg",
+        "SaveMode.Append.name() + SparkSessionExtensions.class.getSimpleName()" +
+          " + row.getLong(0)"),
+        Row(7L), "AppendSparkSessionExtensions7"),
+      // third-party jars on the class path
+      (body("import com.google.common.collect.ImmutableList;\n" +
+          "import org.apache.commons.lang3.StringUtils;", "ThirdParty",
+        "StringUtils.join(ImmutableList.of(row.getString(0), \"b\"), '-')"),
+        Row("a"), "a-b"),
+      // a Scala collection type in a signature
+      (body("", "ScalaSeq", "(long) row.toSeq().size()"), Row(1L, 2L, 3L), 3L))
+    for ((source, in, want) <- cases) {
+      val (src, fqn) = SourceRewriter.rewrite(source)
+      val bytecode = InMemoryJavaCompiler.compile(fqn, src)
+      assert(bytecode.contains(fqn))
+      val inst = AdhesiveInstances.instance(fqn, bytecode)
+      assert(inst.compute(in) == want, fqn)
+    }
   }
 
   test("instance is cached per FQN (reference global-ref parity)") {
@@ -81,13 +105,17 @@ class CompilerSpec extends AnyFunSuite {
   }
 
   test("compile failure raises 'Can't compile function' with diagnostics") {
-    val bad = "public class Broken extends NothingThatExists {}"
-    val (src, fqn) = SourceRewriter.rewrite(bad)
-    val e = intercept[AdhesiveCompileException] {
-      InMemoryJavaCompiler.compile(fqn, src)
+    for ((bad, diagnostic) <- Seq(
+        ("public class Broken extends NothingThatExists {}", "NothingThatExists"),
+        ("import com.nope.Thing;\npublic class Missing {}",
+          "package com.nope does not exist"))) {
+      val (src, fqn) = SourceRewriter.rewrite(bad)
+      val e = intercept[AdhesiveCompileException] {
+        InMemoryJavaCompiler.compile(fqn, src)
+      }
+      assert(e.getMessage.contains("Can't compile function"))
+      assert(e.getMessage.contains(diagnostic), e.getMessage)
     }
-    assert(e.getMessage.contains("Can't compile function"))
-    assert(e.getMessage.contains("NothingThatExists"))
   }
 
   test("source without a class declaration is rejected") {

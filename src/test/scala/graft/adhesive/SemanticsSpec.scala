@@ -204,7 +204,9 @@ class SemanticsSpec extends AnyFunSuite {
           |}
           |'""".stripMargin)
     }
-    assert(e.getMessage.contains("Can't compile function"))
+    assert(e.getMessage.contains("Can't compile function 'f_badsrc':"),
+      e.getMessage)
+    assert(e.getMessage.contains("NothingThatExists"))
   }
 
   test("SQL '' escaping inside the body unescapes to a single quote") {
